@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -144,6 +145,14 @@ def _warm_python_worker_pools(spark) -> None:
     ).write.format("noop").mode("overwrite").save()
 
 
+def _master_cpus(master: str) -> int | None:
+    """Cores a ``local[N]`` / ``local[*]`` master runs on; None otherwise."""
+    m = re.fullmatch(r"local\[(\d+|\*)(?:,\d+)?\]", master)
+    if m is None:
+        return None
+    return os.cpu_count() if m[1] == "*" else int(m[1])
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="dip-bench")
@@ -203,6 +212,10 @@ def main() -> None:
         "queries_mean": means,
         "runs": n_runs,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # what the session actually got, so a record shows whether
+        # SPARK_GRAFT_CPUS was honoured
+        "cpus": _master_cpus(spark.sparkContext.master),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     if times2:
         # second battery (r11+): heavy post-r5 operators, own totals so

@@ -1,16 +1,24 @@
 """Catalog over the driver-generated parquet tables (TESTDATA.md).
 
 Maps the reference's schema-less file model (SURVEY.md section 1.3) to named
-DataFrames. Reads are plain ``spark.read.parquet`` so Catalyst gets predicate
-pushdown / column pruning for free; at 100 TB these would be external tables
-with partition columns, and the same accessors would resolve through the
-metastore instead of paths.
+DataFrames. Reads are ``spark.read.parquet`` so Catalyst gets predicate
+pushdown / column pruning for free. A plain parquet read runs one Spark job to
+infer the schema, so each file's schema is memoized per file identity (real
+path, mtime, size) and per the session confs that change inference; later
+reads pass it with ``.schema(...)`` and run no job. At 100 TB these would be
+external tables with partition columns, and the same accessors would resolve
+their schema once through the metastore instead of paths.
 """
 
 from __future__ import annotations
 
+import copy
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -63,11 +71,64 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+#: Session confs whose value changes the schema Spark infers from a parquet
+#: footer (e.g. nanosAsLong turns TIMESTAMP(NANOS) into bigint). A schema
+#: memoized under one value must never be served under another.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: (realpath, st_mtime_ns, st_size, inference conf values) -> inferred
+#: schema. Rewriting a file changes its mtime and size, so a stale entry is
+#: never hit; StructType is session-independent, so entries outlive sessions.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key of a parquet file, or None when ``path`` is not a regular
+    local file (a Spark-written directory, a remote URI): those always get
+    the plain inferring read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return (os.path.realpath(path), st.st_mtime_ns, st.st_size, confs)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job when the
+    file's schema is already memoized under the session's current confs."""
+    key = _schema_key(spark, path)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key:
+        _SCHEMAS[key] = df.schema
+    return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, memoized like
+    ``read_parquet``. Returns a copy: StructType.add mutates in place."""
+    schema = _SCHEMAS.get(_schema_key(spark, path))
+    if schema is None:
+        schema = read_parquet(spark, path).schema
+    return copy.deepcopy(schema)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -17,17 +17,21 @@ stage and a thundering herd of 32 000 cold CPython imports.
 
 Cluster use: ship the package via ``--py-files`` (or a cluster image)
 and set ``spark.python.daemon.module=data_ingestion_poc_spark.daemon_preload``;
-the module degrades to the stock daemon when the heavy libs are absent.
+a module that cannot be imported (e.g. a heavy lib that is absent) is skipped
+and named on stderr, and the daemon serves workers as the stock one would.
 """
 
 from __future__ import annotations
 
 import importlib
+import sys
 
 #: Exposed as a constant so tests can verify every name actually
-#: imports — the loop below degrades to the stock daemon on ANY
-#: failure, so a typo'd module name would otherwise silently lose its
-#: preload (and the per-fork import tax would quietly return).
+#: imports. A module that fails to import is skipped on its own: the
+#: preload daemon still runs and still preloads every other module, but
+#: forked workers pay that one module's import again. Failures are
+#: recorded in PRELOAD_FAILED and reported on stderr, so a typo'd or
+#: bit-rotted name does not quietly bring the per-fork import tax back.
 PRELOAD_MODULES = (
     "numpy",
     "pandas",
@@ -68,11 +72,26 @@ PRELOAD_MODULES = (
     "data_ingestion_poc_spark.streaming.batch_parity",
 )
 
-for _mod in PRELOAD_MODULES:
-    try:  # pragma: no cover - import side effect only
-        importlib.import_module(_mod)
-    except Exception:  # noqa: BLE001 - any failure => stock behavior
-        pass
+
+def _preload(modules: tuple[str, ...]) -> tuple[str, ...]:
+    """Import each module; return the names that failed, each reported
+    with its error on one stderr line."""
+    failed = []
+    for mod in modules:
+        try:
+            importlib.import_module(mod)
+        except Exception as exc:  # noqa: BLE001 - skip the module, keep the daemon
+            failed.append(mod)
+            print(
+                f"daemon_preload: failed to preload {mod}: "
+                f"{type(exc).__name__}: {exc}",
+                file=sys.stderr,
+            )
+    return tuple(failed)
+
+
+#: Names from PRELOAD_MODULES that failed to import in this process.
+PRELOAD_FAILED = _preload(PRELOAD_MODULES)
 
 from pyspark.daemon import manager  # noqa: E402
 

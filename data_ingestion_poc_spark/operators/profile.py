@@ -61,7 +61,7 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     one = t.orders.agg(*aggs)
     for c in _COLS:
         one = one.crossJoin(
-            t.orders.agg(F.countDistinct(c).alias(f"{c}__d"))
+            F.broadcast(t.orders.agg(F.countDistinct(c).alias(f"{c}__d")))
         )
     stack_args = ", ".join(
         f"'{c}', {c}__n, {c}__d, {c}__min, {c}__max" for c in _COLS

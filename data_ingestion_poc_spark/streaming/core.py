@@ -34,7 +34,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from ..catalog import normalize_event_ts
+    from ..catalog import normalize_event_ts, parquet_schema
 
     # The file stream source requires a DIRECTORY; stage one containing a
     # symlink to the events parquet (zero-copy). Keyed by a digest of the
@@ -52,7 +52,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):
         os.symlink(src, link)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     sdf = spark.readStream.schema(schema).parquet(stage)
     return normalize_event_ts(sdf)
 
@@ -106,6 +106,8 @@ def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import glob
 
+    from ..catalog import parquet_schema
+
     src = os.path.join(sf_dir, "documents.parquet")
     path_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
     stage = os.path.join(
@@ -139,5 +141,5 @@ def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         link = os.path.join(stage, os.path.basename(p))
         if not os.path.exists(link):
             os.symlink(p, link)
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     return spark.readStream.schema(schema).parquet(stage)

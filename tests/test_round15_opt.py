@@ -234,3 +234,43 @@ def test_daemon_preload_modules_all_import():
     assert "data_ingestion_poc_spark.llm.similarity" in PRELOAD_MODULES
     for mod in PRELOAD_MODULES:
         importlib.import_module(mod)
+
+
+def test_daemon_preload_imports_everything_from_the_package_root(tmp_path):
+    """The daemon runs with PYTHONPATH set to the package root only (what
+    session.builder exports to the JVM); in that environment every
+    preload must succeed, so PRELOAD_FAILED is empty and stderr silent."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": pkg_root}
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import json, data_ingestion_poc_spark.daemon_preload as d; "
+            "print(json.dumps(d.PRELOAD_FAILED))",
+        ],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    assert json.loads(proc.stdout) == []
+    assert "failed to preload" not in proc.stderr
+
+
+def test_daemon_preload_reports_a_failed_module(capsys):
+    from data_ingestion_poc_spark.daemon_preload import _preload
+
+    assert _preload(("json", "no_such_module_for_preload")) == (
+        "no_such_module_for_preload",
+    )
+    err = capsys.readouterr().err
+    assert err.count("\n") == 1
+    assert "failed to preload no_such_module_for_preload" in err
