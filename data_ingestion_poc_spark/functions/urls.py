@@ -2,8 +2,9 @@
 
 Ports A13 server-folder derivation (child.py:16-18): urlparse -> hostname,
 port with scheme defaults (ftp 21 / sftp 22), folder = host_port.
-Spark side uses parse_url (Hive-compatible) where possible; port has no
-parse_url part, so both engines share one regexp.
+The rule and its regexps live in ingest/pipeline.py (``server_parts``),
+which the pipeline's derive_columns also uses; the oracle spells the same
+regexps in DuckDB SQL.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ingest.pipeline import HOST_RE, PORT_RE, server_parts
 from ..registry import register
 
 #: (id, url) fixture rows — shapes from the reference README.md:75-82 and
@@ -22,8 +24,6 @@ URLS: list[tuple[int, str]] = [
     (4, "sftp://demo@demo.wftpserver.com:2222/download/manual_en.pdf"),
     (5, "ftp://ftp.freebsd.org/pub/FreeBSD/README.TXT"),
 ]
-
-_PORT_RE = "^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)"
 
 
 def _values() -> str:
@@ -38,8 +38,8 @@ def _values() -> str:
     parts AS (
       SELECT url_id, url,
              regexp_extract(url, '^([a-z]+)://', 1) AS scheme,
-             regexp_extract(url, '^[a-z]+://(?:[^@/]+@)?([^:/]+)', 1) AS host,
-             regexp_extract(url, '{_PORT_RE}', 1) AS port_str
+             regexp_extract(url, '{HOST_RE}', 1) AS host,
+             regexp_extract(url, '{PORT_RE}', 1) AS port_str
       FROM t
     )
     SELECT url_id, scheme, host,
@@ -55,19 +55,12 @@ def fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scheme/host/port/path extraction + the reference's server_folder
     (host_port with scheme-default port, child.py:16-18)."""
     df = spark.createDataFrame(URLS, "url_id int, url string")
-    scheme = F.regexp_extract("url", r"^([a-z]+)://", 1)
-    host = F.parse_url(F.col("url"), F.lit("HOST"))
-    port_str = F.regexp_extract("url", _PORT_RE, 1)
-    port = (
-        F.when(port_str != "", port_str.cast("int"))
-        .when(scheme == "ftp", F.lit(21))
-        .otherwise(F.lit(22))
-    )
+    scheme, host, port, server_folder = server_parts("url")
     return df.select(
         "url_id",
         scheme.alias("scheme"),
         host.alias("host"),
         port.alias("port"),
-        F.concat(host, F.lit("_"), port.cast("string")).alias("server_folder"),
+        server_folder.alias("server_folder"),
         F.regexp_extract("url", r"^[a-z]+://[^/]*(/.*)$", 1).alias("path"),
     )

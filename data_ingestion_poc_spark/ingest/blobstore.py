@@ -15,9 +15,10 @@ verify (child.py:160-221):
 
 This module ports that CONTRACT behind a ``BlobStore`` protocol (the
 ``Fetcher``/``ftp_fixture`` precedent: real protocol object, swappable
-backend). ``LocalBlobStore`` is the tested local backend — bytes land
-as files, the metadata map as a JSON sidecar under ``_meta/`` so
-properties round-trip exactly like blob metadata. ``AzureBlobStore`` is
+backend). ``LocalBlobStore`` is the local backend, and the one behind
+the pipeline's blob sink (``pipeline.write_blob_sink``) — bytes land as
+files, the metadata map as a JSON sidecar under ``_meta/`` so properties
+round-trip exactly like blob metadata. ``AzureBlobStore`` is
 the literal SDK client, import-guarded like ``netfetch.CurlFetcher``
 because the ``azure-storage-blob`` package is absent in this
 environment; a deployment with the wheel installs it and nothing else
@@ -188,11 +189,16 @@ def upload_records(
         variant's A17 semantics at the store level),
       policy='rename': divert to dup_suffixed (action 'renamed';
         child.py:183-188 with the deterministic suffix).
-    A missing or metadata-mismatched blob is always uploaded fresh.
+    A missing or metadata-mismatched blob is always uploaded fresh. Under
+    'overwrite' the pre-upload probe is not made: its answer is unused.
 
-    Every uploaded (or skipped-into) path is then re-probed and
-    ``props_match`` asserts the stored size equals the record length —
+    Every uploaded (or skipped-into) path is re-probed after the task's
+    last upload and ``props_match`` asserts the stored size equals the record length AND
+    the stored modified_time metadata equals the record's —
     child.py:211-218's integrity check, distributed.
+
+    Lazy: uploads happen in one mapInPandas job when the returned frame
+    is acted on, and again each time it is.
 
     Returns one result row per record: bounded by the manifest (one row
     per object, the sink_state shape), never by data bytes.
@@ -202,8 +208,8 @@ def upload_records(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         store = store_factory()
+        out = []
         for pdf in batches:
-            out = []
             for r in pdf.to_dict("records"):
                 content = bytes(r["content"] or b"")
                 path = blob_path_for(
@@ -217,13 +223,15 @@ def upload_records(
                     "modified_time": str(int(r["modified_time"])),
                     "file_size": str(len(content)),
                 }
-                existing = store.get_properties(path)
-                dup = existing is not None and (
-                    existing["metadata"].get("file_size")
-                    == meta["file_size"]
-                    and existing["metadata"].get("modified_time")
-                    == meta["modified_time"]
-                )
+                dup = False
+                if policy != "overwrite":
+                    existing = store.get_properties(path)
+                    dup = existing is not None and (
+                        existing["metadata"].get("file_size")
+                        == meta["file_size"]
+                        and existing["metadata"].get("modified_time")
+                        == meta["modified_time"]
+                    )
                 if dup and policy == "skip":
                     action = "skipped"
                 elif dup and policy == "rename":
@@ -237,7 +245,6 @@ def upload_records(
                 else:
                     store.upload(path, content, meta)
                     action = "uploaded"
-                after = store.get_properties(path)
                 out.append(
                     {
                         "server_folder": r["server_folder"],
@@ -247,16 +254,22 @@ def upload_records(
                         "modified_time": int(r["modified_time"]),
                         "blob_path": path,
                         "action": action,
-                        # verify against the RECORD's length field
-                        # (child.py:211-218's contract), not
-                        # len(content): a truncated fetch then fails
-                        # the audit here instead of passing trivially
-                        "props_match": bool(
-                            after is not None
-                            and after["size"] == int(r["length"])
-                        ),
                     }
                 )
+        # re-probe after ALL of this task's uploads, so a record whose
+        # object a later record of the task overwrote (same blob path)
+        # fails. Verify against the RECORD's length field
+        # (child.py:211-218's contract), not len(content): a truncated
+        # fetch then fails the audit instead of passing trivially.
+        for row in out:
+            after = store.get_properties(row["blob_path"])
+            row["props_match"] = bool(
+                after is not None
+                and after["size"] == row["length"]
+                and after["metadata"].get("modified_time")
+                == str(row["modified_time"])
+            )
+        if out:
             yield pd.DataFrame(out)
 
     cols = [

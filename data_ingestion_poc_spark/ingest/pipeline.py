@@ -18,7 +18,9 @@ Spark mapping (SURVEY.md section 1.4 / section 3.4):
 - left-anti join vs sink_state          = A17 dedup-skip (A16 rename is
   the keep-both variant, rename_policy='rename');
 - write.partitionBy(server_folder,file_type) = A18 sink layout;
-- post-write re-scan counts             = A19/A25 audit.
+- post-write re-scan counts             = A19/A25 audit;
+- blobstore.upload_records (LocalBlobStore) = A18/A19 blob-per-object
+  upload with its metadata map and properties re-check, one job.
 
 Scale: the fetch stage is opaque to Catalyst, so ALL manifest-level
 filtering happens before it; content never leaves executors; the sink
@@ -28,8 +30,10 @@ mtime) table that broadcast-joins against new arrivals.
 
 from __future__ import annotations
 
+import functools
 import io
 import os
+import re
 import zipfile
 from collections.abc import Iterator
 
@@ -40,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators.filters import sanitize_col
 from . import fixtures
+from .blobstore import LocalBlobStore, upload_records
 
 MANIFEST_SCHEMA = "server string, remote_path string"
 
@@ -64,10 +69,29 @@ def manifest_df(spark: SparkSession, manifest=None, n_batches: int = 8) -> DataF
     return spark.createDataFrame(rows, MANIFEST_SCHEMA).repartition(n_batches)
 
 
-def _resolve_local(server: str, remote_path: str) -> str:
-    import re
+#: A13 server URL regexes (child.py:16-18): the host, and an explicit port.
+HOST_RE = r"^[a-z]+://(?:[^@/]+@)?([^:/]+)"
+PORT_RE = r"^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)"
 
-    host = re.match(r"^[a-z]+://(?:[^@/]+@)?([^:/]+)", server).group(1)
+
+def server_parts(url):
+    """(scheme, host, port, server_folder) Columns of a server URL column:
+    the A13 rule (child.py:16-18), server_folder = host_port with the
+    scheme's default port (ftp 21, else 22). derive_columns and
+    functions/urls.py's fn_url both build it here."""
+    scheme = F.regexp_extract(url, r"^([a-z]+)://", 1)
+    host = F.regexp_extract(url, HOST_RE, 1)
+    port_str = F.regexp_extract(url, PORT_RE, 1)
+    port = (
+        F.when(port_str != "", port_str.cast("int"))
+        .when(scheme == "ftp", F.lit(21))
+        .otherwise(F.lit(22))
+    )
+    return scheme, host, port, F.concat(host, F.lit("_"), port.cast("string"))
+
+
+def _resolve_local(server: str, remote_path: str) -> str:
+    host = re.match(HOST_RE, server).group(1)
     root = fixtures.HOST_ROOTS.get(host)
     if root is None:
         raise FileNotFoundError(f"unknown host {host}")
@@ -182,10 +206,6 @@ def make_fetch_stage(fetcher: Fetcher, concurrency: int = 1):
     return fetch_stage
 
 
-#: Default stage over the fixture tree (name kept for existing callers).
-fetch_local = make_fetch_stage(LocalFilesystemFetcher())
-
-
 def fetch(
     spark: SparkSession,
     manifest=None,
@@ -193,16 +213,8 @@ def fetch(
     fetcher: Fetcher | None = None,
     concurrency: int = 1,
 ) -> DataFrame:
-    stage = (
-        make_fetch_stage(fetcher, concurrency=concurrency)
-        if fetcher is not None
-        else (
-            fetch_local
-            if concurrency == 1
-            else make_fetch_stage(
-                LocalFilesystemFetcher(), concurrency=concurrency
-            )
-        )
+    stage = make_fetch_stage(
+        fetcher if fetcher is not None else LocalFilesystemFetcher(), concurrency
     )
     return manifest_df(spark, manifest, n_batches).mapInPandas(
         stage, schema=FETCHED_SCHEMA
@@ -266,32 +278,20 @@ def explode_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(rows)
 
 
-#: port regexes shared with functions/urls.py (A13 semantics)
-_PORT_RE = "^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)"
-_HOST_RE = "^[a-z]+://(?:[^@/]+@)?([^:/]+)"
-
-
 def derive_columns(df: DataFrame) -> DataFrame:
     """Identity derivation, all Column exprs: server_folder = host_port
     with scheme-default port (A13 child.py:16-18), sanitized file_name
     (A11 child.py:20-33, sanitize-BEFORE-type like child.py:131), file_type
     = last extension segment else 'none' (A12 child.py:132 — '.tar.gz'
     -> 'gz')."""
-    scheme = F.regexp_extract("server", r"^([a-z]+)://", 1)
-    host = F.regexp_extract("server", _HOST_RE, 1)
-    port_str = F.regexp_extract("server", _PORT_RE, 1)
-    port = (
-        F.when(port_str != "", port_str.cast("int"))
-        .when(scheme == "ftp", F.lit(21))
-        .otherwise(F.lit(22))
-    )
+    server_folder = server_parts("server")[3]
     file_name = sanitize_col(F.element_at(F.split("remote_path", "/"), -1))
     file_type = F.when(
         file_name.contains("."), F.regexp_extract(file_name, r"\.([^.]*)$", 1)
     ).otherwise("none")
     return df.select(
         "*",
-        F.concat(host, F.lit("_"), port.cast("string")).alias("server_folder"),
+        server_folder.alias("server_folder"),
         file_name.alias("file_name"),
         file_type.alias("file_type"),
     )
@@ -349,6 +349,32 @@ def write_sink(df: DataFrame, sink_dir: str) -> DataFrame:
     )
 
 
+def deliver(
+    spark: SparkSession,
+    manifest=None,
+    sink_state: DataFrame | None = None,
+    policy: str = "skip",
+    fetcher: Fetcher | None = None,
+    concurrency: int = 1,
+) -> tuple[DataFrame, DataFrame]:
+    """One delivery, fetch -> verify -> zip explode -> derive -> dedup ->
+    (deduped records WITH content, quarantine), lazy end to end. The one
+    spelling of the chain: run_pipeline finalizes it, the blob sinks upload
+    it. ``fetcher`` swaps the protocol client (netfetch.FtplibFetcher/
+    CurlFetcher for real servers); default is the local-fixture fetcher.
+    ``concurrency`` > 1 overlaps stat+read inside each task (A5, see
+    make_fetch_stage). ``sink_state`` None is an empty sink: nothing is
+    deduped."""
+    fixtures.build()
+    fetched = fetch(spark, manifest, fetcher=fetcher, concurrency=concurrency)
+    ok, quarantine = split_verified(fetched)
+    exploded = ok.mapInPandas(explode_archives, schema=EXPLODED_SCHEMA)
+    derived = derive_columns(exploded)
+    if sink_state is None:
+        sink_state = spark.createDataFrame([], SINK_STATE_SCHEMA)
+    return dedup_against_sink(derived, sink_state, policy), quarantine
+
+
 def run_pipeline(
     spark: SparkSession,
     manifest=None,
@@ -357,20 +383,13 @@ def run_pipeline(
     fetcher: Fetcher | None = None,
     concurrency: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full pipeline -> (final_records, quarantine). Lazy end to end: one
-    job materializes everything when the caller acts. ``fetcher`` swaps
-    the protocol client (netfetch.FtplibFetcher/CurlFetcher for real
-    servers); default is the local-fixture fetcher. ``concurrency`` > 1
-    overlaps stat+read inside each task (A5, see make_fetch_stage)."""
-    fixtures.build()
-    fetched = fetch(spark, manifest, fetcher=fetcher, concurrency=concurrency)
-    ok, quarantine = split_verified(fetched)
-    exploded = ok.mapInPandas(explode_archives, schema=EXPLODED_SCHEMA)
-    derived = derive_columns(exploded)
-    if sink_state is None:
-        sink_state = spark.createDataFrame([], SINK_STATE_SCHEMA)
-    deduped = dedup_against_sink(derived, sink_state, policy)
-    return finalize(deduped), quarantine
+    """Full pipeline -> (final_records, quarantine): ``deliver`` then
+    ``finalize``. Lazy end to end: one job materializes everything when
+    the caller acts."""
+    records, quarantine = deliver(
+        spark, manifest, sink_state, policy, fetcher, concurrency
+    )
+    return finalize(records), quarantine
 
 
 #: Retry policy for the fetch stage. The reference left retries as a
@@ -418,84 +437,18 @@ def fetch_with_retry(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def write_blob_sink(df: DataFrame, sink_root: str) -> DataFrame:
-    """Blob-per-row sink with metadata fidelity (A18 child.py:196-218):
-    each record's payload is uploaded as its own object under
-    {server_folder}/{file_type}/{file_name} with its metadata map applied
-    — here the filesystem stands in for the blob store, so modified_time
-    becomes the object's mtime (os.utime) and creation_time/file_size are
-    store-derived, exactly like blob properties. The upload runs in
-    foreachPartition: every task ships ITS OWN partition's blobs straight
-    from the executor — no collect, no driver round-trip, the same
-    per-worker upload fan-out the reference got from one child process
-    per server.
+    """Blob-per-row sink with metadata fidelity (A18/A19 child.py:196-218):
+    ``upload_records`` into a ``LocalBlobStore`` at ``sink_root`` (each
+    record's bytes under {server_folder}/{file_type}/{file_name}, its
+    metadata map {creation_time, modified_time, file_size} in the
+    ``_meta/`` sidecar), policy 'overwrite'.
 
-    Returns the post-upload audit (child.py:212-218's properties
-    re-check, distributed): a binaryFile metadata listing of the store
-    joined back to the expected records; props_match asserts size AND
-    mtime round-tripped."""
-    import os
-
-    def upload(rows) -> None:
-        for r in rows:
-            d = os.path.join(sink_root, r["server_folder"], r["file_type"])
-            os.makedirs(d, exist_ok=True)
-            p = os.path.join(d, r["file_name"])
-            with open(p, "wb") as f:
-                f.write(bytes(r["content"] or b""))
-            os.utime(p, (r["modified_time"], r["modified_time"]))
-
-    df.select(
-        "server_folder", "file_type", "file_name", "content", "modified_time"
-    ).foreachPartition(upload)
-
-    # post-upload verify = per-blob properties probe (child.py:212-218's
-    # get_blob_properties loop, distributed): each task stats ITS rows'
-    # objects. A binaryFile listing would be the bulk alternative, but it
-    # silently skips 0-byte objects — the probe sees every blob.
-    import pandas as pd
-
-    def probe(batches):
-        for pdf in batches:
-            sizes, mtimes = [], []
-            for sf, ft, fn in zip(
-                pdf["server_folder"], pdf["file_type"], pdf["file_name"]
-            ):
-                p = os.path.join(sink_root, sf, ft, fn)
-                if os.path.exists(p):
-                    st = os.stat(p)
-                    sizes.append(st.st_size)
-                    mtimes.append(int(st.st_mtime))
-                else:
-                    sizes.append(-1)
-                    mtimes.append(-1)
-            yield pd.DataFrame(
-                {
-                    "server_folder": pdf["server_folder"],
-                    "file_type": pdf["file_type"],
-                    "file_name": pdf["file_name"],
-                    "length": pdf["length"],
-                    "modified_time": pdf["modified_time"],
-                    "stored_size": sizes,
-                    "stored_mtime": mtimes,
-                }
-            )
-
-    audited = df.select(
-        "server_folder", "file_type", "file_name", "length", "modified_time"
-    ).mapInPandas(
-        probe,
-        schema="server_folder string, file_type string, file_name string, "
-        "length bigint, modified_time bigint, stored_size bigint, "
-        "stored_mtime bigint",
-    )
-    return audited.select(
-        "server_folder",
-        "file_type",
-        "file_name",
-        "length",
-        "modified_time",
-        (
-            (F.col("stored_size") == F.col("length"))
-            & (F.col("stored_mtime") == F.col("modified_time"))
-        ).alias("props_match"),
-    )
+    Lazy: nothing is uploaded until the returned audit is acted on, and
+    then in ONE mapInPandas job whose tasks upload their own partition's
+    records and re-probe each object (no collect, no driver round-trip).
+    Acting again re-uploads the same bytes to the same paths, so
+    re-execution is idempotent. props_match asserts the stored size equals
+    the record's length AND the stored modified_time equals the record's.
+    """
+    audit = upload_records(df, functools.partial(LocalBlobStore, sink_root))
+    return audit.drop("blob_path", "action")

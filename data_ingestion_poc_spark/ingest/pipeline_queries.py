@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from . import fixtures
-from .pipeline import run_pipeline, SINK_STATE_SCHEMA
+from .pipeline import deliver, run_pipeline, SINK_STATE_SCHEMA
 
 
 def _sanitize_py(name: str) -> str:
@@ -290,39 +290,22 @@ def ingest_sink_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blob-per-row sink + post-upload properties verify (A18
     child.py:196-218, the last unported Part-A behavior): every final
     record is uploaded as its own object with the reference's metadata
-    map {creation_time, modified_time, file_size} applied (mtime set on
-    the object, size/ctime store-derived), executor-side via
-    foreachPartition, then a distributed binaryFile re-listing of the
-    store proves every property round-tripped (props_match TRUE in the
+    map {creation_time, modified_time, file_size} (write_blob_sink ->
+    blobstore.upload_records into a LocalBlobStore), executor-side in one
+    mapInPandas job whose tasks re-probe each object they upload and prove
+    its size and modified_time round-tripped (props_match TRUE in the
     golden rows)."""
     import os
     import tempfile
     import uuid
 
-    from .pipeline import (
-        dedup_against_sink,
-        derive_columns,
-        explode_archives,
-        fetch,
-        split_verified,
-        write_blob_sink,
-        EXPLODED_SCHEMA,
-        SINK_STATE_SCHEMA,
-    )
-    from . import fixtures
+    from .pipeline import write_blob_sink
 
-    fixtures.build()
-    fetched = fetch(spark)
-    ok, _quarantine = split_verified(fetched)
-    exploded = ok.mapInPandas(explode_archives, schema=EXPLODED_SCHEMA)
-    derived = derive_columns(exploded)
-    deduped = dedup_against_sink(
-        derived, spark.createDataFrame([], SINK_STATE_SCHEMA), "skip"
-    )
+    records, _ = deliver(spark)
     sink_root = os.path.join(
         tempfile.gettempdir(), f"dip_blob_sink_{uuid.uuid4().hex[:8]}"
     )
-    return write_blob_sink(deduped, sink_root)
+    return write_blob_sink(records, sink_root)
 
 
 def _blob_policies_oracle() -> str:
@@ -369,28 +352,12 @@ def ingest_blob_store_policies(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from .blobstore import LocalBlobStore, upload_records
-    from .pipeline import (
-        dedup_against_sink,
-        derive_columns,
-        explode_archives,
-        fetch,
-        split_verified,
-        EXPLODED_SCHEMA,
-    )
 
-    fixtures.build()
-    fetched = fetch(spark)
-    ok, _quarantine = split_verified(fetched)
-    exploded = ok.mapInPandas(explode_archives, schema=EXPLODED_SCHEMA)
-    derived = derive_columns(exploded)
-    # r15: the three upload rounds each consumed the lazy pipeline, so
-    # fetch -> explode_archives (Python) -> derive -> dedup executed
-    # THREE times; one localCheckpoint materializes the manifest-bounded
-    # record frame once and the rounds re-read it (round ordering still
+    # one localCheckpoint materializes the manifest-bounded record frame
+    # once, so the three upload rounds do not each re-run fetch ->
+    # explode_archives (Python) -> derive -> dedup (round ordering is
     # pinned by each round's own eager checkpoint below).
-    records = dedup_against_sink(
-        derived, spark.createDataFrame([], SINK_STATE_SCHEMA), "skip"
-    ).localCheckpoint()
+    records = deliver(spark)[0].localCheckpoint()
     root = os.path.join(
         tempfile.gettempdir(), f"dip_blob_store_{uuid.uuid4().hex[:8]}"
     )

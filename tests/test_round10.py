@@ -110,27 +110,102 @@ def test_upload_records_props_match_uses_record_length(spark, tmp_path):
     """props_match verifies the stored size against the RECORD's length
     field (the reference's integrity contract) — a truncated fetch whose
     content is shorter than the manifest length must flag, not pass
-    trivially against its own len(content)."""
+    trivially against its own len(content) — and the stored modified_time
+    metadata against the record's. A 0-byte record is written and passes.
+    Objects are re-probed after the task's last upload, so a record whose
+    object a later record of the task overwrote fails. The audit is lazy:
+    acting on it twice re-uploads the identical objects and gives
+    identical rows."""
     from data_ingestion_poc_spark.ingest.blobstore import (
         LocalBlobStore,
         upload_records,
     )
 
-    root = str(tmp_path / "store")
+    class TamperingStore(LocalBlobStore):
+        """Stores a modified_time other than the uploaded one for
+        'tampered' blobs."""
+
+        def upload(self, blob_path, data, metadata):
+            if "tampered" in blob_path:
+                metadata = {**metadata, "modified_time": "1"}
+            LocalBlobStore.upload(self, blob_path, data, metadata)
+
+    root = tmp_path / "store"
     df = spark.createDataFrame(
         [
             ("srv", "csv", "ok.csv", 3, 100, bytearray(b"abc")),
             ("srv", "csv", "short.csv", 9, 100, bytearray(b"abc")),
+            ("srv", "csv", "tampered.csv", 3, 100, bytearray(b"abc")),
+            ("srv", "none", "empty", 0, 100, bytearray(b"")),
+            ("srv", "csv", "same.csv", 3, 100, bytearray(b"abc")),
+            ("srv", "csv", "same.csv", 5, 200, bytearray(b"abcde")),
         ],
         "server_folder string, file_type string, file_name string,"
         " length long, modified_time long, content binary",
-    )
-    rows = {
-        r["file_name"]: r
-        for r in upload_records(df, lambda: LocalBlobStore(root)).collect()
+    ).coalesce(1)  # one task, rows in order
+    audit = upload_records(df, lambda: TamperingStore(str(root)))
+
+    def objects():
+        return {
+            str(p.relative_to(root)): p.read_bytes()
+            for p in root.rglob("*")
+            if p.is_file()
+        }
+
+    first = sorted(audit.collect())
+    first_objects = objects()
+    assert sorted(audit.collect()) == first
+    assert objects() == first_objects
+    rows = {(r["file_name"], r["length"]): r["props_match"] for r in first}
+    assert rows == {
+        ("ok.csv", 3): True,
+        ("short.csv", 9): False,
+        ("tampered.csv", 3): False,
+        ("empty", 0): True,
+        ("same.csv", 3): False,
+        ("same.csv", 5): True,
     }
-    assert rows["ok.csv"]["props_match"] is True
-    assert rows["short.csv"]["props_match"] is False
+    assert first_objects["srv/none/empty"] == b""
+    assert json.loads(first_objects["_meta/srv/none/empty.json"]) == {
+        "creation_time": "100",
+        "modified_time": "100",
+        "file_size": "0",
+    }
+
+
+def test_write_blob_sink_reads_each_entry_once(spark, tmp_path):
+    """The blob sink uploads and verifies in one job, so the lazy fetch
+    chain under it runs once: acting on its audit reads every fetchable
+    manifest entry exactly once."""
+    from collections import Counter
+
+    from data_ingestion_poc_spark.ingest import fixtures
+    from data_ingestion_poc_spark.ingest.pipeline import (
+        LocalFilesystemFetcher,
+        deliver,
+        write_blob_sink,
+    )
+
+    log = str(tmp_path / "reads.log")
+
+    class CountingFetcher(LocalFilesystemFetcher):
+        """Appends one line per read to ``log``."""
+
+        def read(self, server, remote_path):
+            with open(log, "a") as f:
+                f.write(f"{server} {remote_path}\n")
+            return LocalFilesystemFetcher.read(self, server, remote_path)
+
+    records, _ = deliver(spark, fetcher=CountingFetcher())
+    audit = write_blob_sink(records, str(tmp_path / "blob")).collect()
+    assert audit and all(r["props_match"] for r in audit)
+    with open(log) as f:
+        reads = Counter(f.read().splitlines())
+    assert reads == Counter(
+        f"{server} {rpath}"
+        for server, rpath in fixtures.MANIFEST
+        if not rpath.startswith("/missing/")
+    )
 
 
 def test_parse_server_scheme_default_ports():
