@@ -2,9 +2,9 @@
 
 Ports A13 server-folder derivation (child.py:16-18): urlparse -> hostname,
 port with scheme defaults (ftp 21 / sftp 22), folder = host_port.
-The rule and its regexps live in ingest/pipeline.py (``server_parts``),
-which the pipeline's derive_columns also uses; the oracle spells the same
-regexps in DuckDB SQL.
+The rule lives here once (``server_parts``): fn_url and the ingest
+pipeline's derive_columns both build it from it. The oracle spells its
+own literal regexps in DuckDB SQL, so it checks the rule independently.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ingest.pipeline import HOST_RE, PORT_RE, server_parts
 from ..registry import register
 
 #: (id, url) fixture rows — shapes from the reference README.md:75-82 and
@@ -24,6 +23,25 @@ URLS: list[tuple[int, str]] = [
     (4, "sftp://demo@demo.wftpserver.com:2222/download/manual_en.pdf"),
     (5, "ftp://ftp.freebsd.org/pub/FreeBSD/README.TXT"),
 ]
+
+#: A13 server URL regexes (child.py:16-18): the host, and an explicit port.
+HOST_RE = r"^[a-z]+://(?:[^@/]+@)?([^:/]+)"
+PORT_RE = r"^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)"
+
+
+def server_parts(url):
+    """(scheme, host, port, server_folder) Columns of a server URL column:
+    the A13 rule (child.py:16-18), server_folder = host_port with the
+    scheme's default port (ftp 21, else 22)."""
+    scheme = F.regexp_extract(url, r"^([a-z]+)://", 1)
+    host = F.regexp_extract(url, HOST_RE, 1)
+    port_str = F.regexp_extract(url, PORT_RE, 1)
+    port = (
+        F.when(port_str != "", port_str.cast("int"))
+        .when(scheme == "ftp", F.lit(21))
+        .otherwise(F.lit(22))
+    )
+    return scheme, host, port, F.concat(host, F.lit("_"), port.cast("string"))
 
 
 def _values() -> str:
@@ -38,8 +56,8 @@ def _values() -> str:
     parts AS (
       SELECT url_id, url,
              regexp_extract(url, '^([a-z]+)://', 1) AS scheme,
-             regexp_extract(url, '{HOST_RE}', 1) AS host,
-             regexp_extract(url, '{PORT_RE}', 1) AS port_str
+             regexp_extract(url, '^[a-z]+://(?:[^@/]+@)?([^:/]+)', 1) AS host,
+             regexp_extract(url, '^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)', 1) AS port_str
       FROM t
     )
     SELECT url_id, scheme, host,

@@ -192,12 +192,15 @@ def upload_records(
     A missing or metadata-mismatched blob is always uploaded fresh. Under
     'overwrite' the pre-upload probe is not made: its answer is unused.
 
-    Every uploaded (or skipped-into) path is re-probed after the task's
-    last upload and ``props_match`` asserts the stored size equals the record length AND
+    Records are hash-partitioned on their blob path first, so all
+    records that share a path land in one task. Every uploaded (or
+    skipped-into) path is re-probed after the task's last upload, and
+    ``props_match`` asserts the stored size equals the record length AND
     the stored modified_time metadata equals the record's —
-    child.py:211-218's integrity check, distributed.
+    child.py:211-218's integrity check, distributed. A record whose
+    object another record overwrote therefore always fails.
 
-    Lazy: uploads happen in one mapInPandas job when the returned frame
+    Lazy: uploads happen in one mapInPandas stage when the returned frame
     is acted on, and again each time it is.
 
     Returns one result row per record: bounded by the manifest (one row
@@ -256,9 +259,9 @@ def upload_records(
                         "action": action,
                     }
                 )
-        # re-probe after ALL of this task's uploads, so a record whose
-        # object a later record of the task overwrote (same blob path)
-        # fails. Verify against the RECORD's length field
+        # re-probe after ALL of this task's uploads: the task holds every
+        # record of its blob paths, so a record whose object another
+        # record overwrote fails. Verify against the RECORD's length field
         # (child.py:211-218's contract), not len(content): a truncated
         # fetch then fails the audit instead of passing trivially.
         for row in out:
@@ -276,4 +279,8 @@ def upload_records(
         "server_folder", "file_type", "file_name",
         "length", "modified_time", "content",
     ]
-    return df.select(*cols).mapInPandas(run, schema=UPLOAD_RESULT_SCHEMA)
+    return (
+        df.select(*cols)
+        .repartition("server_folder", "file_type", "file_name")
+        .mapInPandas(run, schema=UPLOAD_RESULT_SCHEMA)
+    )

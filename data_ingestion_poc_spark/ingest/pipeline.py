@@ -20,7 +20,8 @@ Spark mapping (SURVEY.md section 1.4 / section 3.4):
 - write.partitionBy(server_folder,file_type) = A18 sink layout;
 - post-write re-scan counts             = A19/A25 audit;
 - blobstore.upload_records (LocalBlobStore) = A18/A19 blob-per-object
-  upload with its metadata map and properties re-check, one job.
+  upload with its metadata map and properties re-check, one pass of the
+  fetch chain.
 
 Scale: the fetch stage is opaque to Catalyst, so ALL manifest-level
 filtering happens before it; content never leaves executors; the sink
@@ -42,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.urls import HOST_RE, server_parts
 from ..operators.filters import sanitize_col
 from . import fixtures
 from .blobstore import LocalBlobStore, upload_records
@@ -67,27 +69,6 @@ def manifest_df(spark: SparkSession, manifest=None, n_batches: int = 8) -> DataF
     round-robin)."""
     rows = manifest if manifest is not None else fixtures.MANIFEST
     return spark.createDataFrame(rows, MANIFEST_SCHEMA).repartition(n_batches)
-
-
-#: A13 server URL regexes (child.py:16-18): the host, and an explicit port.
-HOST_RE = r"^[a-z]+://(?:[^@/]+@)?([^:/]+)"
-PORT_RE = r"^[a-z]+://(?:[^@/]+@)?[^:/]+:([0-9]+)"
-
-
-def server_parts(url):
-    """(scheme, host, port, server_folder) Columns of a server URL column:
-    the A13 rule (child.py:16-18), server_folder = host_port with the
-    scheme's default port (ftp 21, else 22). derive_columns and
-    functions/urls.py's fn_url both build it here."""
-    scheme = F.regexp_extract(url, r"^([a-z]+)://", 1)
-    host = F.regexp_extract(url, HOST_RE, 1)
-    port_str = F.regexp_extract(url, PORT_RE, 1)
-    port = (
-        F.when(port_str != "", port_str.cast("int"))
-        .when(scheme == "ftp", F.lit(21))
-        .otherwise(F.lit(22))
-    )
-    return scheme, host, port, F.concat(host, F.lit("_"), port.cast("string"))
 
 
 def _resolve_local(server: str, remote_path: str) -> str:
@@ -443,9 +424,11 @@ def write_blob_sink(df: DataFrame, sink_root: str) -> DataFrame:
     metadata map {creation_time, modified_time, file_size} in the
     ``_meta/`` sidecar), policy 'overwrite'.
 
-    Lazy: nothing is uploaded until the returned audit is acted on, and
-    then in ONE mapInPandas job whose tasks upload their own partition's
-    records and re-probe each object (no collect, no driver round-trip).
+    Lazy: nothing is uploaded until the returned audit is acted on. Then
+    the fetch chain under ``df`` runs once, its records are shuffled so
+    each blob path's records share one task, and one mapInPandas stage
+    uploads them and re-probes each object (no collect, no driver
+    round-trip).
     Acting again re-uploads the same bytes to the same paths, so
     re-execution is idempotent. props_match asserts the stored size equals
     the record's length AND the stored modified_time equals the record's.

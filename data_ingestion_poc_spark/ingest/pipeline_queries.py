@@ -292,9 +292,9 @@ def ingest_sink_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     record is uploaded as its own object with the reference's metadata
     map {creation_time, modified_time, file_size} (write_blob_sink ->
     blobstore.upload_records into a LocalBlobStore), executor-side in one
-    mapInPandas job whose tasks re-probe each object they upload and prove
-    its size and modified_time round-tripped (props_match TRUE in the
-    golden rows)."""
+    mapInPandas stage whose tasks re-probe each object they upload and
+    prove its size and modified_time round-tripped (props_match TRUE in
+    the golden rows)."""
     import os
     import tempfile
     import uuid

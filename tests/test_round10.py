@@ -173,6 +173,51 @@ def test_upload_records_props_match_uses_record_length(spark, tmp_path):
     }
 
 
+def test_upload_records_same_path_across_tasks(spark, tmp_path):
+    """Two records with one blob path that start in different partitions
+    (/inbox/a.csv and /data/a.csv on one server derive the same path) are
+    uploaded by one task, so the record whose object the other overwrote
+    reads props_match False."""
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
+
+    from data_ingestion_poc_spark.ingest.blobstore import (
+        LocalBlobStore,
+        upload_records,
+    )
+
+    log = str(tmp_path / "uploads.log")
+
+    class TaskLoggingStore(LocalBlobStore):
+        """Appends the uploading task's attempt id per upload to ``log``."""
+
+        def upload(self, blob_path, data, metadata):
+            with open(log, "a") as f:
+                f.write(f"{TaskContext.get().taskAttemptId()}\n")
+            LocalBlobStore.upload(self, blob_path, data, metadata)
+
+    root = tmp_path / "store"
+    rows = [
+        ("srv", "csv", "a.csv", 3, 100, bytearray(b"abc")),
+        ("srv", "csv", "a.csv", 5, 200, bytearray(b"abcde")),
+    ]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2),
+        "server_folder string, file_type string, file_name string,"
+        " length long, modified_time long, content binary",
+    )
+    parts = df.select(F.spark_partition_id().alias("p")).collect()
+    assert len({r["p"] for r in parts}) == 2
+    audit = upload_records(df, lambda: TaskLoggingStore(str(root))).collect()
+    with open(log) as f:
+        tasks = f.read().splitlines()
+    assert len(tasks) == 2 and len(set(tasks)) == 1
+    stored = (root / "srv" / "csv" / "a.csv").stat().st_size
+    assert sorted((r["length"], r["props_match"]) for r in audit) == sorted(
+        [(3, stored == 3), (5, stored == 5)]
+    )
+
+
 def test_write_blob_sink_reads_each_entry_once(spark, tmp_path):
     """The blob sink uploads and verifies in one job, so the lazy fetch
     chain under it runs once: acting on its audit reads every fetchable
